@@ -31,7 +31,9 @@ object JobProfile {
     spark.range(1000000).selectExpr("sum(id)").collect()
     val jobs = mutable.LinkedHashMap[Int, Job]()
     val stageTasks = mutable.HashMap[Int, Int]()
-    val shuffleBytes = Array(0L, 0L) // (write, read) summed over recorded stages
+    // (write, read) shuffle bytes per stage id: a retried stage attempt
+    // replaces its earlier attempt's numbers instead of adding to them
+    val shuffleBytes = mutable.HashMap[Int, (Long, Long)]()
     var record = false
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
@@ -45,8 +47,8 @@ object JobProfile {
         // the per-query number a narrowing change must move)
         val m = e.stageInfo.taskMetrics
         if (m != null) shuffleBytes.synchronized {
-          shuffleBytes(0) += m.shuffleWriteMetrics.bytesWritten
-          shuffleBytes(1) += m.shuffleReadMetrics.totalBytesRead
+          shuffleBytes(e.stageInfo.stageId) =
+            (m.shuffleWriteMetrics.bytesWritten, m.shuffleReadMetrics.totalBytesRead)
         }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = if (record) {
@@ -75,7 +77,7 @@ object JobProfile {
         case Some(fn) =>
           fn(spark, sfDir).count() // warm lap: artifacts built, code compiled
           jobs.clear(); stageTasks.clear()
-          shuffleBytes.synchronized { shuffleBytes(0) = 0L; shuffleBytes(1) = 0L }
+          shuffleBytes.synchronized { shuffleBytes.clear() }
           phases.synchronized { phases.clear() }
           record = true
           val t0 = System.nanoTime()
@@ -86,7 +88,9 @@ object JobProfile {
           Thread.sleep(300)
           val snap = jobs.synchronized { jobs.values.toSeq }
           val jobSum = snap.map(j => (j.tEnd - j.t0) / 1e3).sum
-          val (sw, sr) = shuffleBytes.synchronized { (shuffleBytes(0), shuffleBytes(1)) }
+          val (sw, sr) = shuffleBytes.synchronized {
+            (shuffleBytes.values.map(_._1).sum, shuffleBytes.values.map(_._2).sum)
+          }
           println(f"== $name%s rows=$n%d wall=$wall%.3f s, ${snap.size}%d jobs (sum ${jobSum}%.3f s, gaps ${wall - jobSum}%.3f s, shuffle w=${sw / 1024.0 / 1024.0}%.2f MiB r=${sr / 1024.0 / 1024.0}%.2f MiB)")
           snap.sortBy(j => -(j.tEnd - j.t0)).take(8).foreach { j =>
             println(f"   job ${j.id}%3d  ${(j.tEnd - j.t0) / 1e3}%7.3f s  ${j.site}%s")

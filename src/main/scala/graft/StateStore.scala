@@ -43,6 +43,12 @@ object StateStore {
         s"${ArtifactKey.stamped(src(dir, table), hadoopConf)}/$name")
       .getAbsoluteFile
 
+  /** Finish or undo an epoch swap a crash interrupted — run at every
+    * entry point, before [[latest]] can pick a half-swapped epoch.
+    */
+  private def recover(base: java.io.File): Unit =
+    ArtifactSwap.pending(base).foreach(ArtifactSwap.local(base, _).recover())
+
   /** Delete the persisted state (forces the next ensure to rebuild). */
   def drop(dir: String, table: String, name: String): Unit =
     ArtifactKey.rmRecursive(root(dir, table, name))
@@ -54,6 +60,7 @@ object StateStore {
   def ensure(spark: SparkSession, dir: String, table: String, name: String,
              state: => DataFrame): DataFrame = synchronized {
     val base = root(dir, table, name, spark.sessionState.newHadoopConf())
+    recover(base)
     val seed = new java.io.File(base, "seed")
     if (!new java.io.File(seed, "_SUCCESS").isFile) {
       ArtifactKey.dropSuperseded(
@@ -67,40 +74,25 @@ object StateStore {
   /** Persist one fold's OUTPUT as the next standing snapshot — its own
     * epoch directory beside the seed, so the fold loop is: take
     * [[latest]], fold the batch, [[advance]] with the batch's key.
-    * IDEMPOTENT per `epochKey` (an at-least-once replay overwrites its
-    * own epoch; a crash mid-write leaves no `_SUCCESS`, so the
-    * half-epoch is invisible to [[latest]] until the replay completes
-    * it — the SrpIndex generation contract). Epoch keys must sort in
-    * fold order (zero-padded sequence numbers, ISO dates): [[latest]]
-    * takes the lexicographic max.
+    * IDEMPOTENT per `epochKey`: each write is staged beside the epoch
+    * and swapped in ([[ArtifactSwap]]), so an at-least-once replay
+    * replaces its own epoch, and a crash at any point leaves [[latest]]
+    * serving either the committed snapshot or the new one, never a
+    * truncated one. Epoch keys must sort in fold order (zero-padded
+    * sequence numbers, ISO dates): [[latest]] takes the lexicographic
+    * max.
     */
   def advance(spark: SparkSession, dir: String, table: String, name: String,
               epochKey: String, state: DataFrame): DataFrame = synchronized {
-    require(epochKey.nonEmpty && epochKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"epochKey must be a [A-Za-z0-9_-]+ label; got '$epochKey'")
+    val leaf = "epoch_" + ArtifactSwap.checkKey(epochKey)
     val base = root(dir, table, name, spark.sessionState.newHadoopConf())
+    recover(base)
     require(new java.io.File(new java.io.File(base, "seed"), "_SUCCESS").isFile,
       s"advance requires a seeded state — ensure() first ($base)")
-    val epoch = new java.io.File(base, s"epoch_$epochKey")
-    if (!new java.io.File(epoch, "_SUCCESS").isFile) {
-      // first write: a crash leaves no _SUCCESS, the half-epoch is
-      // invisible to [[latest]] until the replay completes it
-      state.write.mode("overwrite").parquet(epoch.getPath)
-    } else {
-      // replay of a COMMITTED epoch: mode("overwrite") in place would
-      // delete the committed snapshot before writing, so a crash
-      // mid-replay silently regresses [[latest]] to an older epoch.
-      // Write beside it and swap — the committed snapshot stays present
-      // for all but the two metadata renames. The tmp name must NOT
-      // match the `epoch_` prefix or latest() could pick a half-swap.
-      val tmp = new java.io.File(base, s"__replay_epoch_$epochKey")
-      ArtifactKey.rmRecursive(tmp)
-      state.write.mode("overwrite").parquet(tmp.getPath)
-      ArtifactKey.rmRecursive(epoch)
-      require(tmp.renameTo(epoch), s"epoch replay swap failed: $tmp -> $epoch")
-    }
-    ReadCache.parquetLocal(spark, epoch)
+    val sw = ArtifactSwap.local(base, leaf)
+    state.write.mode("overwrite").parquet(sw.stage())
+    sw.commit()
+    ReadCache.parquetLocal(spark, new java.io.File(base, leaf))
   }
 
   /** The newest committed snapshot for (source, name): the
@@ -110,10 +102,9 @@ object StateStore {
   def latest(spark: SparkSession, dir: String, table: String,
              name: String): Option[DataFrame] = synchronized {
     val base = root(dir, table, name, spark.sessionState.newHadoopConf())
-    val epochs = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("epoch_") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .sortBy(_.getName)
+    recover(base)
+    val epochs = ArtifactSwap.listLive(base, "epoch_")
+      .filter(f => new java.io.File(f, "_SUCCESS").isFile)
     val pick = epochs.lastOption.orElse {
       val seed = new java.io.File(base, "seed")
       if (new java.io.File(seed, "_SUCCESS").isFile) Some(seed) else None

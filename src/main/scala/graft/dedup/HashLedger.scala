@@ -78,6 +78,12 @@ object HashLedger {
   private def sessionMemo(spark: SparkSession): scala.collection.mutable.HashMap[String, Handle] =
     emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
 
+  /** The two leaves [[compact]] swaps under one commit marker: `meta`
+    * carries the group count the `hashes` layout is hashed by (the
+    * [[LshIndex]] rationale).
+    */
+  private def swap(base: java.io.File) = graft.ArtifactSwap.local(base, "meta", "hashes")
+
   /** Build-or-reuse the ledger of `<dir>`'s corpus. `corpus` is only
     * evaluated (and scanned) on a cold build.
     */
@@ -96,17 +102,11 @@ object HashLedger {
     * evaluated on a cold build; `idCol`/`textCol` are provenance labels
     * recorded in meta.
     */
-  /** The two leaves [[compact]] swaps under one commit marker: `meta`
-    * first — it carries the group count the `hashes` layout is hashed
-    * by (the [[LshIndex.compactLeaves]] rationale).
-    */
-  private val compactLeaves = Seq("meta", "hashes")
-
   def ensureHashes(spark: SparkSession, dir: String, hashes: => DataFrame,
                    idCol: String, textCol: String,
                    subset: String): Handle = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
+    swap(base).recover()
     val hashesPath = new java.io.File(base, "hashes").getPath
     val metaPath = new java.io.File(base, "meta").getPath
     if (!new java.io.File(hashesPath, "_SUCCESS").isFile ||
@@ -175,7 +175,7 @@ object HashLedger {
   def append(spark: SparkSession, dir: String, newHashes: DataFrame,
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
+    swap(base).recover()
     val hashesPath = new java.io.File(base, "hashes").getPath
     val metaPath = new java.io.File(base, "meta").getPath
     require(new java.io.File(hashesPath, "_SUCCESS").isFile,
@@ -200,21 +200,16 @@ object HashLedger {
     * match. Membership answers are identical before and after
     * (parity-gated in DedupSpec).
     *
-    * Crash safety (r20 hardening — the [[LshIndex.compact]] note
-    * verbatim): both leaves write fully beside the live tree, an
-    * explicit marker commits the two swaps, and
-    * [[graft.sim.IndexMaintenance.recoverMarked]] at every entry point
-    * rolls an interrupted compact forward or back. The old
-    * delete-then-rename + rewrite-meta-after flow could lose every
-    * appended batch's addresses to a silent source rebuild, or leave
-    * probes hashing `__grp` with a stale group count. Run offline
-    * (probes holding the old Handle keep reading the old files until
-    * they re-ensure).
+    * Crash safety is the [[LshIndex.compact]] one: both leaves swap
+    * under one [[graft.ArtifactSwap]] commit. Run offline (probes
+    * holding the old Handle keep reading the old files until they
+    * re-ensure).
     */
   def compact(spark: SparkSession, dir: String, subset: String = "all",
               failpoint: String => Unit = _ => ()): Handle = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
+    val sw = swap(base)
+    sw.recover()
     val hashesDir = new java.io.File(base, "hashes")
     val metaPath = new java.io.File(base, "meta").getPath
     require(new java.io.File(hashesDir, "_SUCCESS").isFile,
@@ -224,30 +219,17 @@ object HashLedger {
       .select(col("content_md5")).distinct()
     val n = distinctAddrs.count()
     val groups = autoGroups(n)
-    val tmpH = new java.io.File(base, "hashes__compact")
-    graft.ArtifactKey.rmRecursive(tmpH)
     // source and destination are different directories, so the rewrite
     // streams old files into new ones — no checkpoint, no driver state
     distinctAddrs
       .withColumn("__grp", grpOf(col("content_md5"), groups))
       .repartition(groups, col("__grp"))
-      .write.mode("overwrite").partitionBy("__grp").parquet(tmpH.getPath)
+      .write.mode("overwrite").partitionBy("__grp").parquet(sw.stage("hashes"))
     import spark.implicits._
-    val tmpM = new java.io.File(base, "meta__compact")
-    graft.ArtifactKey.rmRecursive(tmpM)
     Seq((groups, n, meta.getAs[String]("id_col"), meta.getAs[String]("text_col")))
       .toDF("groups", "n", "id_col", "text_col")
-      .coalesce(1).write.mode("overwrite").parquet(tmpM.getPath)
-    val marker = graft.sim.IndexMaintenance.markerFile(base)
-    require(marker.createNewFile() || marker.isFile,
-      s"compact commit-marker create failed: $marker")
-    failpoint("committed")
-    // destructive phase — mirror of recoverMarked's roll-forward order
-    graft.sim.IndexMaintenance.swapLeaf(base, "meta")
-    failpoint("meta-swapped")
-    graft.sim.IndexMaintenance.swapLeaf(base, "hashes")
-    failpoint("hashes-swapped")
-    marker.delete()
+      .coalesce(1).write.mode("overwrite").parquet(sw.stage("meta"))
+    sw.commit(failpoint)
     Handle(graft.ReadCache.parquetLocal(spark, hashesDir), groups,
       meta.getAs[String]("id_col"), meta.getAs[String]("text_col"))
   }

@@ -102,24 +102,23 @@ object LshIndex {
   private def sessionMemo(spark: SparkSession): scala.collection.mutable.HashMap[String, Handle] =
     emptyMemo.computeIfAbsent(spark, _ => scala.collection.mutable.HashMap.empty)
 
+  /** The two leaves [[compact]] swaps under one commit marker: `meta`
+    * carries the group count the `buckets` layout is hashed by, and
+    * [[graft.ArtifactSwap.recover]] heals any crash window between the
+    * two swaps before a probe can read a mismatched pair.
+    */
+  private def swap(base: java.io.File) = graft.ArtifactSwap.local(base, "meta", "buckets")
+
   /** Build-or-reuse the index of `<dir>`'s corpus. `corpus` is only
     * evaluated (and scanned) on a cold build.
     */
-  /** The two leaves [[compact]] swaps under one commit marker: `meta`
-    * FIRST is deliberate — it carries the group count the `buckets`
-    * layout is hashed by, and [[graft.sim.IndexMaintenance
-    * .recoverMarked]] heals any crash window between the two before a
-    * probe can read a mismatched pair.
-    */
-  private val compactLeaves = Seq("meta", "buckets")
-
   def ensure(spark: SparkSession, dir: String, corpus: => DataFrame,
              idCol: String = "doc_id", textCol: String = "text",
              shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, shingleSize, bands, rowsPerBand, subset,
       spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
+    swap(base).recover()
     val bucketsPath = new java.io.File(base, "buckets").getPath
     val metaPath = new java.io.File(base, "meta").getPath
     def emptyHandle(df: DataFrame): Handle = Handle(
@@ -194,7 +193,7 @@ object LshIndex {
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, shingleSize, bands, rowsPerBand, subset,
       spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
+    swap(base).recover()
     val bucketsPath = new java.io.File(base, "buckets").getPath
     val metaPath = new java.io.File(base, "meta").getPath
     require(new java.io.File(bucketsPath, "_SUCCESS").isFile,
@@ -224,21 +223,12 @@ object LshIndex {
     * cap contract after (occupancy is exact again) — both gated in
     * DedupSpec.
     *
-    * Crash safety (r20 hardening, the [[graft.sim.SrpIndex.compact]]
-    * marker discipline): BOTH leaves — the re-grouped `buckets` layout
-    * AND the `meta` row that carries the group count probes hash by —
-    * are fully written beside the live tree first, then an explicit
-    * commit marker spans the two swaps (each two metadata renames).
-    * The old delete-then-rename + rewrite-meta-after flow had two
-    * silent-corruption windows: a crash between delete and rename left
-    * NO buckets leaf, so the next ensure() cold-rebuilt from the
-    * source slice and silently LOST every appended batch's rows; a
-    * crash between the rename and the meta rewrite left probes hashing
-    * `__grp` with the OLD group count against the NEW layout —
-    * silently missed candidates. [[graft.sim.IndexMaintenance
-    * .recoverMarked]] (run at every entry point) now rolls either
-    * window forward or back; crash injection gated in DedupSpec via
-    * `failpoint`. Run offline, like every maintenance pass here.
+    * Crash safety: BOTH leaves — the re-grouped `buckets` layout AND
+    * the `meta` row that carries the group count probes hash by — swap
+    * under one [[graft.ArtifactSwap]] commit, so a crash can neither
+    * lose the appended rows to a cold rebuild nor leave probes hashing
+    * `__grp` with a stale group count. `failpoint` is the swap's test
+    * hook. Run offline, like every maintenance pass here.
     */
   def compact(spark: SparkSession, dir: String,
               shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
@@ -246,7 +236,8 @@ object LshIndex {
               failpoint: String => Unit = _ => ()): Handle = synchronized {
     val base = root(dir, shingleSize, bands, rowsPerBand, subset,
       spark.sessionState.newHadoopConf())
-    graft.sim.IndexMaintenance.recoverMarked(base, compactLeaves)
+    val sw = swap(base)
+    sw.recover()
     val bucketsDir = new java.io.File(base, "buckets")
     val metaPath = new java.io.File(base, "meta").getPath
     require(new java.io.File(bucketsDir, "_SUCCESS").isFile,
@@ -257,33 +248,20 @@ object LshIndex {
       .select(col(idColName), col("band"), col("bucket")).distinct()
     val total = rows.count()
     val groups = autoGroups(total)
-    val tmpB = new java.io.File(base, "buckets__compact")
-    graft.ArtifactKey.rmRecursive(tmpB)
     rows
       .withColumn("bsize", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
       .withColumn("__grp", grpOf(col("band"), col("bucket"), groups))
       .repartition(groups, col("__grp"))
-      .write.mode("overwrite").partitionBy("__grp").parquet(tmpB.getPath)
+      .write.mode("overwrite").partitionBy("__grp").parquet(sw.stage("buckets"))
     import spark.implicits._
     val bandsM = meta.getAs[Int]("bands")
-    val tmpM = new java.io.File(base, "meta__compact")
-    graft.ArtifactKey.rmRecursive(tmpM)
     Seq((meta.getAs[Int]("shingle"), bandsM, meta.getAs[Int]("rows"), groups,
          total / math.max(1, bandsM), meta.getAs[String]("id_col"),
          meta.getAs[String]("text_col")))
       .toDF("shingle", "bands", "rows", "groups", "n", "id_col", "text_col")
-      .coalesce(1).write.mode("overwrite").parquet(tmpM.getPath)
-    val marker = graft.sim.IndexMaintenance.markerFile(base)
-    require(marker.createNewFile() || marker.isFile,
-      s"compact commit-marker create failed: $marker")
-    failpoint("committed")
-    // destructive phase — mirror of recoverMarked's roll-forward order
-    graft.sim.IndexMaintenance.swapLeaf(base, "meta")
-    failpoint("meta-swapped")
-    graft.sim.IndexMaintenance.swapLeaf(base, "buckets")
-    failpoint("buckets-swapped")
-    marker.delete()
+      .coalesce(1).write.mode("overwrite").parquet(sw.stage("meta"))
+    sw.commit(failpoint)
     Handle(graft.ReadCache.parquetLocal(spark, bucketsDir),
       meta.getAs[Int]("shingle"), bandsM, meta.getAs[Int]("rows"), groups,
       meta.getAs[String]("id_col"), meta.getAs[String]("text_col"))

@@ -69,46 +69,23 @@ object NameIndex {
     pairs.withColumn("__occ", count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy("__tok")))
 
+  /** The universe is one leaf beside its sibling subsets; [[append]]
+    * swaps it per [[graft.ArtifactSwap]], whose roll-forward applies a
+    * committed merge even though its caller never got the ack
+    * (at-least-once is the contract, and a replay anti-joins to nothing).
+    */
+  private def swap(base: java.io.File) =
+    graft.ArtifactSwap.local(base.getParentFile, base.getName)
+
   /** The capped (token, name) frame for `standing`'s distinct names.
     * `standing` is only evaluated (and scanned) on a cold build.
     */
-  /** Finish or undo an interrupted [[append]] swap — run at every entry
-    * point. The merged rewrite at `<base>__compact` carries its own
-    * `_SUCCESS` as the commit marker: present → roll FORWARD (the
-    * append is applied even though its caller never got the ack —
-    * at-least-once is the contract, and a replay anti-joins to
-    * nothing); absent → roll BACK (discard the partial rewrite,
-    * restore a universe parked at `__precompact`). Without this, a
-    * crash between the swap renames would leave NO live index and the
-    * next ensure() would cold-rebuild from the source slice — silently
-    * losing every appended batch's names.
-    */
-  private def recover(base: java.io.File): Unit = {
-    val tmp = new java.io.File(base.getPath + "__compact")
-    val old = new java.io.File(base.getPath + "__precompact")
-    if (new java.io.File(tmp, "_SUCCESS").isFile) {
-      if (base.exists()) {
-        graft.ArtifactKey.rmRecursive(old)
-        require(base.renameTo(old), s"append recovery failed: $base -> $old")
-      }
-      require(tmp.renameTo(base), s"append recovery failed: $tmp -> $base")
-      graft.ArtifactKey.rmRecursive(old)
-    } else {
-      graft.ArtifactKey.rmRecursive(tmp)
-      if (old.exists()) {
-        if (!base.exists())
-          require(old.renameTo(base), s"append rollback failed: $old -> $base")
-        else graft.ArtifactKey.rmRecursive(old)
-      }
-    }
-  }
-
   def ensure(spark: SparkSession, dir: String, table: String, subset: String,
              standing: => DataFrame, nameCol: String,
              blockCap: Int = EntityResolution.defaultBlockCap): DataFrame = synchronized {
     val conf = spark.sessionState.newHadoopConf()
     val base = root(dir, table, subset, blockCap, conf)
-    recover(base)
+    swap(base).recover()
     if (!new java.io.File(base, "_SUCCESS").isFile) {
       val stampedDir = base.getParentFile
       graft.ArtifactKey.dropSuperseded(
@@ -135,12 +112,9 @@ object NameIndex {
     * rows; the expensive term ensure amortizes (scanning the standing
     * TABLE) is never re-paid.
     *
-    * The merged rewrite commits via its own `_SUCCESS` and swaps in
-    * with two renames (live parked at `__precompact`, never deleted
-    * before the new universe is live); [[recover]] at every entry
-    * point rolls a crash at any point forward or back — the round's
-    * compact discipline, because a lost swap here would silently lose
-    * every appended batch's names to the next source rebuild.
+    * The merged rewrite swaps in per [[graft.ArtifactSwap]] — a lost
+    * swap here would silently lose every appended batch's names to the
+    * next source rebuild. `failpoint` is the swap's test hook.
     */
   def append(spark: SparkSession, dir: String, table: String, subset: String,
              newNames: DataFrame, nameCol: String,
@@ -148,25 +122,16 @@ object NameIndex {
              failpoint: String => Unit = _ => ()): DataFrame = synchronized {
     val conf = spark.sessionState.newHadoopConf()
     val base = root(dir, table, subset, blockCap, conf)
-    recover(base)
+    val sw = swap(base)
+    sw.recover()
     require(new java.io.File(base, "_SUCCESS").isFile,
       s"append requires a persisted index — ensure() first ($base)")
     val old = graft.ReadCache.parquetLocal(spark, base).select("__sname", "__tok")
     val batchPairs = uncappedPairs(newNames, nameCol)
       .join(old.select("__sname").distinct(), Seq("__sname"), "left_anti")
     val merged = withOcc(old.unionByName(batchPairs))
-    val tmp = new java.io.File(base.getPath + "__compact")
-    graft.ArtifactKey.rmRecursive(tmp)
-    merged.write.mode("overwrite").parquet(tmp.getPath)
-    failpoint("committed")
-    // destructive phase — mirror of recover()'s roll-forward order
-    val oldDir = new java.io.File(base.getPath + "__precompact")
-    graft.ArtifactKey.rmRecursive(oldDir)
-    require(base.renameTo(oldDir), s"append stage failed: $base -> $oldDir")
-    failpoint("base-aside")
-    require(tmp.renameTo(base), s"append swap failed: $tmp -> $base")
-    failpoint("swapped")
-    graft.ArtifactKey.rmRecursive(oldDir)
+    merged.write.mode("overwrite").parquet(sw.stage())
+    sw.commit(failpoint)
     capped(graft.ReadCache.parquetLocal(spark, base), blockCap)
   }
 }

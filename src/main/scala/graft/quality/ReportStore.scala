@@ -2,6 +2,7 @@ package graft.quality
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ArtifactSwap
 
 /** Append-only persisted metric history — the cross-RUN seam of the dq
   * family (the HashLedger discipline applied to check reports): each
@@ -42,32 +43,11 @@ object ReportStore {
   def append(report: DataFrame, path: String, period: String): Unit = {
     require(period.nonEmpty && !period.contains("/") && !period.contains("\\"),
       s"period must be a plain path segment; got '$period'")
-    recover(report.sparkSession, path)
+    ArtifactSwap.hadoop(report.sparkSession, path).recover()
     report.select(lit(period).as("period"), col("check_name"),
         col("col_name"), col("metric"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/$period")
-  }
-
-  /** Finish an interrupted [[compact]] before touching the store —
-    * called by EVERY entry point (append/load/compact), not just
-    * compact's preamble. Without this, a crash between compact's two
-    * swap renames (history parked at `__precompact`, live path absent)
-    * followed by the NEXT DAY's append would re-create the live path
-    * with one fresh period — and the next compact's "stale recovery
-    * copy" rule (old + live both present → drop old) would then delete
-    * the parked FULL HISTORY silently. Recovery first means the append
-    * lands on the restored store instead of a fresh one.
-    */
-  private def recover(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (fs.exists(old) && !fs.exists(p)) {
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(s"report-store recovery failed: $old -> $p")
-    }
   }
 
   /** The full metric history: (period, check_name, col_name, metric).
@@ -84,7 +64,7 @@ object ReportStore {
     * how freshness is recognized.)
     */
   def load(spark: SparkSession, path: String): DataFrame = {
-    recover(spark, path)
+    ArtifactSwap.hadoop(spark, path).recover()
     spark.read.option("recursiveFileLookup", "true").parquet(path)
       .withColumn("__fresh",
         element_at(split(input_file_name(), "/"), -2) === col("period"))
@@ -94,31 +74,14 @@ object ReportStore {
   }
 
   /** Rewrite the store as one compact file set (the HashLedger compact
-    * pass — a year of daily appends is 365 tiny files). Same two-rename
-    * swap discipline as [[graft.sink.ZOrderTable.compact]], including
-    * crash recovery from the `__precompact` copy.
+    * pass — a year of daily appends is 365 tiny files), swapped in per
+    * [[ArtifactSwap]]. Every entry point recovers an interrupted compact
+    * first (here through [[load]]).
     */
   def compact(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) {
-      if (!fs.exists(p)) {
-        if (!fs.rename(old, p))
-          throw new java.io.IOException(s"report-store recovery failed: $old -> $p")
-      } else fs.delete(old, true)
-    }
-    load(spark, path).coalesce(1).write.parquet(tmp.toString)
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"report-store compact stage failed: $p -> $old")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p)
-      throw new java.io.IOException(s"report-store compact swap failed: $tmp -> $p")
-    }
-    fs.delete(old, true)
+    val swap = ArtifactSwap.hadoop(spark, path)
+    load(spark, path).coalesce(1).write.parquet(swap.stage())
+    swap.commit()
   }
 
   /** Append `report` under `period`, then judge it against the stored

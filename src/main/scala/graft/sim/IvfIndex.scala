@@ -82,7 +82,7 @@ object IvfIndex {
              idCol: String = "vec_id", vecCol: String = "embedding",
              subset: String = "all"): (DataFrame, Seq[Seq[Double]]) = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    recover(base)
+    swap(base).recover()
     val corpusPath = new java.io.File(base, "corpus").getPath
     val centsPath = new java.io.File(base, "centroids").getPath
     if (!new java.io.File(corpusPath, "_SUCCESS").isFile ||
@@ -111,12 +111,7 @@ object IvfIndex {
         return h
       }
       val cells = Similarity.autoCells(n)
-      // a cold build starts a fresh index lifetime: a folded-keys ledger
-      // surviving from a prior lifetime at this path would wrongly no-op
-      // appends that reuse a batch key — and a surviving generation dir
-      // would union a PRIOR lifetime's rows into the fresh index
-      foldedKeysFile(base).delete()
-      genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
+      graft.ArtifactSwap.resetGenerations(base)
       val cents = Similarity.kmeansCentroids(df, cells, 0, idCol, vecCol)
         .map(_.toSeq).toSeq
       // centroids persist beside the corpus: probe selection must use the
@@ -149,19 +144,20 @@ object IvfIndex {
     * generation (each its own cell-partitioned parquet root, so dynamic
     * partition pruning applies to all of them alike).
     */
-  private def readAll(spark: SparkSession, base: java.io.File): DataFrame = {
-    val gens = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("append_") &&
-        new java.io.File(f, "_SUCCESS").isFile)
-      .map(_.getPath).sorted
+  private def readAll(spark: SparkSession, base: java.io.File): DataFrame =
     // one read per root, unioned: a multi-path partitioned read trips
     // partition-structure inference; per-root scans also keep partition
     // (cell) pruning per generation. Handles are ReadCache-memoized: a
     // rewritten root (overwrite, compact swap) re-reads, an unchanged one
     // skips the per-read listing + schema-inference job.
-    (new java.io.File(base, "corpus") +: gens.toSeq.map(new java.io.File(_)))
+    (new java.io.File(base, "corpus") +: graft.ArtifactSwap.completed(base))
       .map(graft.ReadCache.parquetLocal(spark, _)).reduce(_.unionByName(_))
-  }
+
+  /** The corpus leaf and the folded-keys ledger swap together on
+    * [[compact]] ([[graft.ArtifactSwap]] holds the crash contract).
+    */
+  private def swap(base: java.io.File) =
+    graft.ArtifactSwap.local(base, "corpus", graft.ArtifactSwap.FoldedKeys)
 
   /** Fold a batch of NEW vectors into the persisted index — the
     * index-MAINTENANCE rung (the LshIndex/HashLedger/EdgeIndex story
@@ -189,11 +185,10 @@ object IvfIndex {
              batch: DataFrame, idCol: String = "vec_id",
              vecCol: String = "embedding",
              subset: String = "all"): (DataFrame, Seq[Seq[Double]]) = synchronized {
-    require(batchKey.nonEmpty && batchKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    recover(base)
+    val gen = graft.ArtifactSwap.generation(base, batchKey)
+    val sw = swap(base)
+    sw.recover()
     val corpusPath = new java.io.File(base, "corpus").getPath
     val centsPath = new java.io.File(base, "centroids").getPath
     require(new java.io.File(corpusPath, "_SUCCESS").isFile &&
@@ -206,30 +201,12 @@ object IvfIndex {
     // rows rank the same neighbor into two top-k slots). This closes the
     // at-least-once window compact would otherwise reopen — the
     // folded-keys ledger commits atomically with the fold itself.
-    if (readFoldedKeys(base).contains(batchKey)) return (readAll(spark, base), cents)
+    if (sw.folded.contains(batchKey)) return (readAll(spark, base), cents)
     Similarity.assignCells(batch, cents, idCol, vecCol)
       .repartition(cents.length, col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell")
-      .parquet(new java.io.File(base, s"append_$batchKey").getPath)
+      .write.mode("overwrite").partitionBy("__cell").parquet(gen.getPath)
     (readAll(spark, base), cents)
   }
-
-  /** Single-leaf maintenance mechanics shared with [[PqIndex]] /
-    * [[IvfPqIndex]] — see [[IndexMaintenance]] for the crash-safety
-    * contract (recovery of an interrupted compact, the folded-keys
-    * replay ledger, the generation fold).
-    */
-  private def recover(base: java.io.File): Unit =
-    IndexMaintenance.recover(base, "corpus")
-
-  private def readFoldedKeys(base: java.io.File): Set[String] =
-    IndexMaintenance.readFoldedKeys(base)
-
-  private def foldedKeysFile(base: java.io.File): java.io.File =
-    IndexMaintenance.foldedKeysFile(base)
-
-  private def genDirs(base: java.io.File): Array[java.io.File] =
-    IndexMaintenance.genDirs(base)
 
   /** Fold every completed [[append]] generation back into the base
     * corpus leaf — the maintenance pass that keeps the probe's file
@@ -249,36 +226,22 @@ object IvfIndex {
     * replay would re-create rows the fold already holds and duplicate
     * vectors would rank one neighbor into two top-k slots.
     *
-    * Crash safety follows [[graft.sink.ZOrderTable.compact]]'s
-    * two-rename discipline extended to the generation fold: the fresh
-    * layout is fully written beside the live tree first (its `_SUCCESS`
-    * is the commit point), and only then are generations deleted and
-    * the corpus leaf swapped (live → `__precompact`, fold → live, drop
-    * the parked copy). A crash at ANY point leaves a state [[recover]]
-    * — run by every entry — finishes or undoes; the swap window itself
-    * is two metadata renames. Run offline, like every maintenance pass
-    * here (concurrent cross-JVM appends during the fold are out of
-    * contract, same as HashLedger/LshIndex). `failpoint` is a test
-    * hook: SimilaritySpec throws from it at each phase label to prove
-    * the recovery claims against the REAL crash states.
+    * Crash safety is [[graft.ArtifactSwap]]'s: a crash at any point
+    * self-heals at the next entry point. Run offline, like every
+    * maintenance pass here (concurrent cross-JVM appends during the
+    * fold are out of contract). `failpoint` is the swap's test hook.
     */
   def compact(spark: SparkSession, dir: String, subset: String = "all",
               failpoint: String => Unit = _ => ()): (DataFrame, Seq[Seq[Double]]) = synchronized {
     val base = root(dir, subset, spark.sessionState.newHadoopConf())
-    recover(base)
+    val sw = swap(base)
+    sw.recover()
     val corpusDir = new java.io.File(base, "corpus")
     val centsPath = new java.io.File(base, "centroids").getPath
     require(new java.io.File(corpusDir, "_SUCCESS").isFile &&
       new java.io.File(centsPath, "_SUCCESS").isFile,
       s"compact requires a persisted index — ensure() first ($corpusDir)")
     val cents = readCents(spark, centsPath)
-    val tmp = new java.io.File(base, "corpus__compact")
-    graft.ArtifactKey.rmRecursive(tmp)
-    // stage the folded-keys ledger FIRST (harmless alone — rollback
-    // discards it): mark exactly the COMPLETED generations the fold
-    // below reads, never incomplete ones (see IndexMaintenance)
-    IndexMaintenance.stageFoldedKeys(base, genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile).map(_.getName))
     // source and destination are different directories, so the fold
     // streams old files into new ones — no checkpoint, no driver state;
     // the same one-task-per-cell repartition alignment as the build
@@ -287,10 +250,11 @@ object IvfIndex {
     // generation, a post-fold replay no-ops on the keys ledger — an
     // unconditional distinct() over array columns would be the fold's
     // dominant shuffle for zero rows removed.
+    val gens = graft.ArtifactSwap.completed(base)
     readAll(spark, base)
       .repartition(cents.length, col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell").parquet(tmp.getPath)
-    IndexMaintenance.finishCompact(base, "corpus", failpoint)
+      .write.mode("overwrite").partitionBy("__cell").parquet(sw.stage())
+    sw.commit(failpoint, gens)
     (readAll(spark, base), cents)
   }
 }

@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions.col
   * persist beside their own index) and pays one extra build-time
   * equi-join of the two frames on the vector id to lay codes out by
   * cell. Reuse ladder / artifact keying / empty-corpus memo identical
-  * to [[IvfIndex]]; [[append]]/[[compact]] maintenance mechanics are
-  * [[IndexMaintenance]]'s (shared with IvfIndex/PqIndex).
+  * to [[IvfIndex]]; [[compact]]'s crash safety is [[graft.ArtifactSwap]]'s.
   */
 object IvfPqIndex {
 
@@ -49,15 +48,14 @@ object IvfPqIndex {
     * dynamic partition pruning applies to all of them alike — the
     * IvfIndex shape).
     */
-  private def readAll(spark: SparkSession, base: java.io.File): DataFrame = {
-    val gens = IndexMaintenance.genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile)
-      .sorted
+  private def readAll(spark: SparkSession, base: java.io.File): DataFrame =
     // handles ReadCache-memoized like IvfIndex.readAll: unchanged roots
     // skip the per-read listing + schema-inference job
-    (new java.io.File(base, "codes_by_cell") +: gens.toSeq)
+    (new java.io.File(base, "codes_by_cell") +: graft.ArtifactSwap.completed(base))
       .map(graft.ReadCache.parquetLocal(spark, _)).reduce(_.unionByName(_))
-  }
+
+  private def swap(base: java.io.File) =
+    graft.ArtifactSwap.local(base, "codes_by_cell", graft.ArtifactSwap.FoldedKeys)
 
   /** The (cell-partitioned code table, IVF centroids, PQ codebooks)
     * triple for `<dir>`'s corpus: codes are (idCol, __codes, __cell)
@@ -74,7 +72,7 @@ object IvfPqIndex {
     val (codes, cb) = PqIndex.ensure(spark, dir, corpus,
       idCol = idCol, vecCol = vecCol, subset = subset)
     val base = root(dir, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes_by_cell")
+    swap(base).recover()
     val joinedPath = new java.io.File(base, "codes_by_cell").getPath
     if (!new java.io.File(joinedPath, "_SUCCESS").isFile) {
       sessionMemo(spark).get(base.getPath) match {
@@ -89,11 +87,7 @@ object IvfPqIndex {
       graft.ArtifactKey.dropSuperseded(
         base.getParentFile.getParentFile, graft.ArtifactKey.pathKey(dir) + "_",
         base.getParentFile.getName)
-      // a cold build starts a fresh index lifetime (see IndexMaintenance):
-      // drop the ledger AND any prior lifetime's generation dirs (their
-      // rows would otherwise union into the fresh index)
-      IndexMaintenance.foldedKeysFile(base).delete()
-      IndexMaintenance.genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
+      graft.ArtifactSwap.resetGenerations(base)
       // one build-time equi-join lays the codes out by cell; repartition
       // on the cell first so partitionBy writes ONE file per cell
       // directory (the IvfIndex alignment trick)
@@ -120,16 +114,14 @@ object IvfPqIndex {
              batch: DataFrame, idCol: String = "vec_id",
              vecCol: String = "embedding", subset: String = "all"
             ): (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = synchronized {
-    require(batchKey.nonEmpty && batchKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes_by_cell")
+    val gen = graft.ArtifactSwap.generation(base, batchKey)
+    val sw = swap(base)
+    sw.recover()
     require(new java.io.File(new java.io.File(base, "codes_by_cell"), "_SUCCESS").isFile,
       s"no persisted index at $base — ensure() a base corpus before append()")
     val (cents, cb) = quantizers(spark, dir, subset)
-    if (IndexMaintenance.readFoldedKeys(base).contains(batchKey))
-      return (readAll(spark, base), cents, cb)
+    if (sw.folded.contains(batchKey)) return (readAll(spark, base), cents, cb)
     // ONE map-side pass derives codes AND cell per batch row (both are
     // pure per-row functions of the frozen quantizers over the same
     // frame) — the previous encode-frame ⋈ assign-frame equi-join on the
@@ -142,8 +134,7 @@ object IvfPqIndex {
         org.apache.spark.sql.graft.VectorFunctions
           .nearestCellsNative(col(vecCol), cents, 1).getItem(0).as("__cell"))
       .repartition(cents.length, col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell")
-      .parquet(new java.io.File(base, s"append_$batchKey").getPath)
+      .write.mode("overwrite").partitionBy("__cell").parquet(gen.getPath)
     (readAll(spark, base), cents, cb)
   }
 
@@ -151,24 +142,22 @@ object IvfPqIndex {
     * leaf — one file per cell again ([[IvfIndex.compact]], applied to
     * the composed layout). Rows preserved exactly; both quantizers
     * untouched. Crash safety and the folded-keys ledger are
-    * [[IndexMaintenance]]'s. Run offline.
+    * [[graft.ArtifactSwap]]'s. Run offline.
     */
   def compact(spark: SparkSession, dir: String, subset: String = "all",
               failpoint: String => Unit = _ => ()
              ): (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]]) = synchronized {
     val base = root(dir, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes_by_cell")
+    val sw = swap(base)
+    sw.recover()
     require(new java.io.File(new java.io.File(base, "codes_by_cell"), "_SUCCESS").isFile,
       s"compact requires a persisted index — ensure() first ($base)")
     val (cents, cb) = quantizers(spark, dir, subset)
-    val tmp = new java.io.File(base, "codes_by_cell__compact")
-    graft.ArtifactKey.rmRecursive(tmp)
-    IndexMaintenance.stageFoldedKeys(base, IndexMaintenance.genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile).map(_.getName))
+    val gens = graft.ArtifactSwap.completed(base)
     readAll(spark, base)
       .repartition(cents.length, col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell").parquet(tmp.getPath)
-    IndexMaintenance.finishCompact(base, "codes_by_cell", failpoint)
+      .write.mode("overwrite").partitionBy("__cell").parquet(sw.stage())
+    sw.commit(failpoint, gens)
     (readAll(spark, base), cents, cb)
   }
 

@@ -84,7 +84,7 @@ object PqIndex {
              subset: String = "all"
             ): (DataFrame, Seq[Seq[Seq[Double]]]) = synchronized {
     val base = root(dir, m, ksub, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes")
+    swap(base).recover()
     val codesPath = new java.io.File(base, "codes").getPath
     val booksPath = new java.io.File(base, "codebooks").getPath
     if (!new java.io.File(codesPath, "_SUCCESS").isFile ||
@@ -110,12 +110,7 @@ object PqIndex {
         sessionMemo(spark)(base.getPath) = h
         return h
       }
-      // a cold build starts a fresh index lifetime: a folded-keys ledger
-      // surviving from a prior lifetime would wrongly no-op appends that
-      // reuse a batch key — and a surviving generation dir would union a
-      // PRIOR lifetime's rows into the fresh index
-      IndexMaintenance.foldedKeysFile(base).delete()
-      IndexMaintenance.genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
+      graft.ArtifactSwap.resetGenerations(base)
       // codebooks persist beside the codes: ADC LUTs must use the EXACT
       // quantizer the codes were written with, across JVMs
       import spark.implicits._
@@ -145,13 +140,12 @@ object PqIndex {
     * generation, one read per root unioned (the IvfIndex shape; handles
     * ReadCache-memoized like IvfIndex.readAll).
     */
-  private def readAll(spark: SparkSession, base: java.io.File): DataFrame = {
-    val gens = IndexMaintenance.genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile)
-      .sorted
-    (new java.io.File(base, "codes") +: gens.toSeq)
+  private def readAll(spark: SparkSession, base: java.io.File): DataFrame =
+    (new java.io.File(base, "codes") +: graft.ArtifactSwap.completed(base))
       .map(graft.ReadCache.parquetLocal(spark, _)).reduce(_.unionByName(_))
-  }
+
+  private def swap(base: java.io.File) =
+    graft.ArtifactSwap.local(base, "codes", graft.ArtifactSwap.FoldedKeys)
 
   /** Fold a batch of NEW vectors into the persisted code table — the
     * [[IvfIndex.append]] rung for the compression path: batch rows
@@ -169,25 +163,22 @@ object PqIndex {
              batch: DataFrame, m: Int = 0, ksub: Int = 0,
              idCol: String = "vec_id", vecCol: String = "embedding",
              subset: String = "all"): (DataFrame, Seq[Seq[Seq[Double]]]) = synchronized {
-    require(batchKey.nonEmpty && batchKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, m, ksub, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes")
+    val gen = graft.ArtifactSwap.generation(base, batchKey)
+    val sw = swap(base)
+    sw.recover()
     val codesPath = new java.io.File(base, "codes").getPath
     val booksPath = new java.io.File(base, "codebooks").getPath
     require(new java.io.File(codesPath, "_SUCCESS").isFile &&
       new java.io.File(booksPath, "_SUCCESS").isFile,
       s"no persisted index at $base — ensure() a base corpus before append()")
     val cb = readBooks(spark, booksPath)
-    if (IndexMaintenance.readFoldedKeys(base).contains(batchKey))
-      return (readAll(spark, base), cb)
+    if (sw.folded.contains(batchKey)) return (readAll(spark, base), cb)
     // REBALANCE (AQE) sizes the generation's files (the SrpIndex.append
     // note): un-hinted, the codes land in the batch's input partitioning
     // — dozens of near-empty files per append at test scale
     Similarity.pqEncode(batch, cb, idCol, vecCol).hint("rebalance")
-      .write.mode("overwrite")
-      .parquet(new java.io.File(base, s"append_$batchKey").getPath)
+      .write.mode("overwrite").parquet(gen.getPath)
     (readAll(spark, base), cb)
   }
 
@@ -196,36 +187,26 @@ object PqIndex {
     * compression path (file count, not bytes, is what appends grow).
     * Rows preserved exactly; codebooks untouched (re-sizing the
     * quantizer is a rebuild). Crash safety and the folded-keys ledger
-    * are [[IndexMaintenance]]'s — a crash at any phase self-heals at
-    * the next entry point. Run offline.
+    * are [[graft.ArtifactSwap]]'s. Run offline.
     */
   def compact(spark: SparkSession, dir: String, m: Int = 0, ksub: Int = 0,
               subset: String = "all",
               failpoint: String => Unit = _ => ()): (DataFrame, Seq[Seq[Seq[Double]]]) = synchronized {
     val base = root(dir, m, ksub, spark.sessionState.newHadoopConf(), subset)
-    IndexMaintenance.recover(base, "codes")
+    val sw = swap(base)
+    sw.recover()
     val codesDir = new java.io.File(base, "codes")
     val booksPath = new java.io.File(base, "codebooks").getPath
     require(new java.io.File(codesDir, "_SUCCESS").isFile &&
       new java.io.File(booksPath, "_SUCCESS").isFile,
       s"compact requires a persisted index — ensure() first ($codesDir)")
     val cb = readBooks(spark, booksPath)
-    val tmp = new java.io.File(base, "codes__compact")
-    graft.ArtifactKey.rmRecursive(tmp)
-    IndexMaintenance.stageFoldedKeys(base, IndexMaintenance.genDirs(base)
-      .filter(f => new java.io.File(f, "_SUCCESS").isFile).map(_.getName))
-    // size the fold by the on-disk bytes being folded (codes are m
-    // bytes/vector — usually one file suffices at test scale)
-    val bytes = (codesDir +: IndexMaintenance.genDirs(base).toSeq)
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    val nFiles = math.max(1L, (bytes +
-      graft.sink.BucketedMirror.targetBucketBytes - 1) /
-      graft.sink.BucketedMirror.targetBucketBytes).toInt
+    // codes are m bytes/vector — usually one file suffices at test scale
+    val gens = graft.ArtifactSwap.completed(base)
     readAll(spark, base)
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(tmp.getPath)
-    IndexMaintenance.finishCompact(base, "codes", failpoint)
+      .repartition(graft.ArtifactSwap.foldFiles(codesDir +: gens))
+      .write.mode("overwrite").parquet(sw.stage())
+    sw.commit(failpoint, gens)
     (readAll(spark, base), cb)
   }
 }

@@ -916,8 +916,11 @@ object Similarity {
                 val score =
                   if (out.isEmpty) cs(i).cos
                   else lambdaRel * cs(i).cos - mu * maxSim(i)
-                if (best < 0 || score > bestScore ||
-                    (score == bestScore && cs(i).neighbor_id < cs(best).neighbor_id)) {
+                // ascending on -score under the total Double order, as
+                // the pre-r22 minBy ranked: a NaN score ranks last
+                val c = java.lang.Double.compare(-score, -bestScore)
+                if (best < 0 || c < 0 ||
+                    (c == 0 && cs(i).neighbor_id < cs(best).neighbor_id)) {
                   best = i; bestScore = score
                 }
               }

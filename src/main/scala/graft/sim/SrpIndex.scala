@@ -123,7 +123,7 @@ object SrpIndex {
              idCol: String = "vec_id", vecCol: String = "embedding",
              subset: String = "all"): Handle = synchronized {
     val base = root(dir, nTables, spark.sessionState.newHadoopConf(), subset)
-    recover(base)
+    swap(base).recover()
     val bucketsPath = new java.io.File(base, "buckets").getPath
     val vectorsPath = new java.io.File(base, "vectors").getPath
     val metaPath = new java.io.File(base, "meta").getPath
@@ -151,12 +151,7 @@ object SrpIndex {
       }
       val planes = Similarity.autoPlanes(n)
       val groups = autoGroups(n * nTables)
-      // a cold build starts a fresh index lifetime: a folded-keys ledger
-      // surviving from a prior lifetime would wrongly no-op appends that
-      // reuse a batch key — and a surviving generation dir would union a
-      // PRIOR lifetime's rows into the fresh index
-      foldedKeysFile(base).delete()
-      genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
+      graft.ArtifactSwap.resetGenerations(base)
       import spark.implicits._
       Seq((planes, nTables, groups, n)).toDF("planes", "tables", "groups", "n")
         .coalesce(1).write.mode("overwrite").parquet(metaPath)
@@ -212,16 +207,22 @@ object SrpIndex {
     // append() writes vectors first and buckets last, so buckets/_SUCCESS
     // doubles as the generation's commit marker; checking both here also
     // survives a manually truncated generation.
-    val gens = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("append_") &&
-        new java.io.File(new java.io.File(f, "buckets"), "_SUCCESS").isFile &&
-        new java.io.File(new java.io.File(f, "vectors"), "_SUCCESS").isFile)
-      .map(f => new java.io.File(f, leaf)).sorted
+    val gens = completed(base).map(new java.io.File(_, leaf))
     // handles ReadCache-memoized like IvfIndex.readAll: unchanged roots
     // skip the per-read listing + schema-inference job
-    (new java.io.File(base, leaf) +: gens.toSeq)
+    (new java.io.File(base, leaf) +: gens)
       .map(graft.ReadCache.parquetLocal(spark, _)).reduce(_.unionByName(_))
   }
+
+  private def completed(base: java.io.File): Seq[java.io.File] =
+    graft.ArtifactSwap.completed(base, "buckets", "vectors")
+
+  /** [[compact]] folds TWO leaves (buckets + vectors) plus the
+    * folded-keys ledger under one commit marker — see
+    * [[graft.ArtifactSwap]] for the crash contract.
+    */
+  private def swap(base: java.io.File) =
+    graft.ArtifactSwap.local(base, "vectors", "buckets", graft.ArtifactSwap.FoldedKeys)
 
   /** Fold a batch of NEW vectors into the persisted index — the
     * [[IvfIndex.append]] rung for SRP search: batch rows bucket with
@@ -242,11 +243,10 @@ object SrpIndex {
              batch: DataFrame, idCol: String = "vec_id",
              vecCol: String = "embedding",
              subset: String = "all"): Handle = synchronized {
-    require(batchKey.nonEmpty && batchKey.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"batchKey must be a [A-Za-z0-9_-]+ generation label; got '$batchKey'")
     val base = root(dir, nTables, spark.sessionState.newHadoopConf(), subset)
-    recover(base)
+    val gen = graft.ArtifactSwap.generation(base, batchKey)
+    val sw = swap(base)
+    sw.recover()
     val metaPath = new java.io.File(base, "meta").getPath
     require(new java.io.File(new java.io.File(base, "buckets"), "_SUCCESS").isFile &&
       new java.io.File(metaPath, "_SUCCESS").isFile,
@@ -254,10 +254,9 @@ object SrpIndex {
     val (planes, tables, groups) = readMeta(spark, metaPath)
     // a batchKey whose generation was already FOLDED by [[compact]] must
     // no-op, not re-append — see the [[IvfIndex.append]] rationale
-    if (readFoldedKeys(base).contains(batchKey))
+    if (sw.folded.contains(batchKey))
       return Handle(readAll(spark, base, "buckets"), readAll(spark, base, "vectors"),
         planes, tables, groups)
-    val gen = new java.io.File(base, s"append_$batchKey")
     val (q8c, sc) = Similarity.int8Candidate(col(vecCol))
     // vectors FIRST, buckets LAST: readAll keys a generation's visibility
     // on both leaf markers, and this ordering makes buckets/_SUCCESS the
@@ -286,97 +285,6 @@ object SrpIndex {
       planes, nTables, groups)
   }
 
-  /** Every append-generation directory, completed or not (an incomplete
-    * generation was never VISIBLE — [[readAll]] gates on both leaf
-    * markers — so deleting it loses nothing a probe ever saw; the
-    * at-least-once driver replays the batch).
-    */
-  private def genDirs(base: java.io.File): Array[java.io.File] =
-    Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("append_"))
-
-  /** The batch keys [[compact]] has already folded into the base leaves
-    * — the [[IvfIndex]] ledger, same rationale: [[append]] must no-op
-    * an at-least-once replay of a folded batch (its generation is gone;
-    * re-creating it would double-count rows the fold already holds).
-    * Marks only COMPLETED generations — exactly the set [[readAll]]
-    * folds; marking an incomplete one would lose its replay.
-    */
-  private def foldedKeysFile(base: java.io.File): java.io.File =
-    new java.io.File(base, "folded_keys")
-
-  private def readFoldedKeys(base: java.io.File): Set[String] = {
-    val f = foldedKeysFile(base)
-    if (!f.isFile) Set.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.readAllLines(
-        f.toPath, java.nio.charset.StandardCharsets.UTF_8)
-        .asScala.filter(_.nonEmpty).toSet
-    }
-  }
-
-  /** Roll the staged folded-keys ledger in (idempotent under recovery
-    * replay).
-    */
-  private def commitFoldedKeys(base: java.io.File): Unit = {
-    val tmpK = new java.io.File(base, "folded_keys__compact")
-    if (tmpK.isFile) {
-      val live = foldedKeysFile(base)
-      live.delete()
-      require(tmpK.renameTo(live), s"compact keys swap failed: $tmpK -> $live")
-    }
-  }
-
-  /** [[compact]]'s commit marker: the fold touches TWO leaves
-    * (buckets + vectors), so no single tmp `_SUCCESS` can mark the
-    * destructive phase the way [[IvfIndex.compact]]'s one-leaf tmp can
-    * — a crash between the two leaf swaps would otherwise leave one
-    * leaf folded and the other not, with the folded generations already
-    * deleted. The marker is created only after BOTH tmp folds are fully
-    * written and removed only after both swaps land; [[recover]] keys
-    * roll-forward vs roll-back on it alone. Marker + swap mechanics are
-    * [[IndexMaintenance]]'s (shared with LshIndex/HashLedger).
-    */
-  private def markerFile(base: java.io.File): java.io.File =
-    IndexMaintenance.markerFile(base)
-
-  private def swapLeaf(base: java.io.File, leaf: String): Unit =
-    IndexMaintenance.swapLeaf(base, leaf)
-
-  /** Finish or undo an interrupted [[compact]] — run by every entry
-    * point (ensure/append/compact) so a crash mid-swap self-heals
-    * before any read or write touches the index. Marker present → both
-    * folds committed: roll FORWARD (delete the folded generations,
-    * finish both leaf swaps, drop the marker). Marker absent → the fold
-    * never committed: roll BACK (discard partial folds, restore any
-    * leaf parked at `__precompact`). Without this, ensure() after a
-    * crash between the swap renames would see a missing leaf marker and
-    * cold-REBUILD with fresh hyperplane sizing while surviving
-    * generations still carry the old geometry's buckets.
-    */
-  private def recover(base: java.io.File): Unit = {
-    if (markerFile(base).isFile) {
-      commitFoldedKeys(base)
-      genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
-      swapLeaf(base, "vectors")
-      swapLeaf(base, "buckets")
-      markerFile(base).delete()
-    } else {
-      new java.io.File(base, "folded_keys__compact").delete()
-      Seq("vectors", "buckets").foreach { leaf =>
-        graft.ArtifactKey.rmRecursive(new java.io.File(base, leaf + "__compact"))
-        val old = new java.io.File(base, leaf + "__precompact")
-        val live = new java.io.File(base, leaf)
-        if (old.exists()) {
-          if (!live.exists())
-            require(old.renameTo(live), s"compact rollback failed: $old -> $live")
-          else graft.ArtifactKey.rmRecursive(old)
-        }
-      }
-    }
-  }
-
   /** Fold every completed [[append]] generation back into the base
     * leaves — the maintenance pass that keeps the probe's file
     * economics flat after a year of daily appends (each generation adds
@@ -399,75 +307,35 @@ object SrpIndex {
     *
     * The folded batch keys land in a ledger committed with the fold so
     * [[append]] can no-op an at-least-once replay of a folded batch.
-    *
-    * Crash safety: both folds are fully written beside the live tree,
-    * then [[markerFile]] commits the destructive phase (generation
-    * delete + two leaf swaps, each two metadata renames). A crash at
-    * ANY point leaves a state [[recover]] finishes or undoes. Run
-    * offline, like every maintenance pass here. `failpoint` is a test
-    * hook: SimilaritySpec throws from it at each phase label to prove
-    * the recovery claims against the REAL crash states.
+    * Crash safety is [[graft.ArtifactSwap]]'s; `failpoint` is its test
+    * hook. Run offline, like every maintenance pass here.
     */
   def compact(spark: SparkSession, dir: String, nTables: Int,
               subset: String = "all",
               failpoint: String => Unit = _ => ()): Handle = synchronized {
     val base = root(dir, nTables, spark.sessionState.newHadoopConf(), subset)
-    recover(base)
+    val sw = swap(base)
+    sw.recover()
     val metaPath = new java.io.File(base, "meta").getPath
     require(new java.io.File(new java.io.File(base, "buckets"), "_SUCCESS").isFile &&
       new java.io.File(new java.io.File(base, "vectors"), "_SUCCESS").isFile &&
       new java.io.File(metaPath, "_SUCCESS").isFile,
       s"compact requires a persisted index — ensure() first ($base)")
     val (planes, _, groups) = readMeta(spark, metaPath)
-    val tmpV = new java.io.File(base, "vectors__compact")
-    val tmpB = new java.io.File(base, "buckets__compact")
-    graft.ArtifactKey.rmRecursive(tmpV)
-    graft.ArtifactKey.rmRecursive(tmpB)
-    // stage the folded-keys ledger FIRST (harmless alone — rollback
-    // discards it): mark exactly the COMPLETED generations the folds
-    // below read, never incomplete ones (see foldedKeysFile). No row
-    // dedup in the folds themselves — a pre-fold replay overwrites its
-    // own generation, a post-fold replay no-ops on this ledger, so
-    // replayed rows cannot exist by construction.
-    val folded = readFoldedKeys(base) ++ genDirs(base)
-      .filter(f =>
-        new java.io.File(new java.io.File(f, "buckets"), "_SUCCESS").isFile &&
-        new java.io.File(new java.io.File(f, "vectors"), "_SUCCESS").isFile)
-      .map(_.getName.stripPrefix("append_"))
-    java.nio.file.Files.write(
-      new java.io.File(base, "folded_keys__compact").toPath,
-      folded.toSeq.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // vectors: size the fold by the on-disk bytes being folded (no
-    // Spark job — a directory listing), one ~256 MB file per chunk
-    val vecBytes = (new java.io.File(base, "vectors") +:
-      genDirs(base).map(new java.io.File(_, "vectors")).toSeq)
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty).toSeq)
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    val vecFiles = math.max(1L, (vecBytes +
-      graft.sink.BucketedMirror.targetBucketBytes - 1) /
-      graft.sink.BucketedMirror.targetBucketBytes).toInt
+    // no row dedup in the folds: a pre-fold replay overwrites its own
+    // generation, a post-fold replay no-ops on the folded-keys ledger, so
+    // replayed rows cannot exist by construction
+    val gens = completed(base)
     readAll(spark, base, "vectors")
-      .repartition(vecFiles)
-      .write.mode("overwrite").parquet(tmpV.getPath)
+      .repartition(graft.ArtifactSwap.foldFiles(
+        (base +: gens).map(new java.io.File(_, "vectors"))))
+      .write.mode("overwrite").parquet(sw.stage("vectors"))
     // buckets: the same one-task-per-group repartition alignment as the
     // build writes ONE file per group directory again
     readAll(spark, base, "buckets")
       .repartition(groups, col("__grp"))
-      .write.mode("overwrite").partitionBy("__grp").parquet(tmpB.getPath)
-    require(markerFile(base).createNewFile() || markerFile(base).isFile,
-      s"compact commit-marker create failed: ${markerFile(base)}")
-    failpoint("committed")
-    // destructive phase — mirror of recover()'s roll-forward order
-    commitFoldedKeys(base)
-    failpoint("keys-swapped")
-    genDirs(base).foreach(graft.ArtifactKey.rmRecursive)
-    failpoint("gens-deleted")
-    swapLeaf(base, "vectors")
-    failpoint("vectors-swapped")
-    swapLeaf(base, "buckets")
-    failpoint("buckets-swapped")
-    markerFile(base).delete()
+      .write.mode("overwrite").partitionBy("__grp").parquet(sw.stage("buckets"))
+    sw.commit(failpoint, gens)
     Handle(readAll(spark, base, "buckets"), readAll(spark, base, "vectors"),
       planes, nTables, groups)
   }

@@ -86,8 +86,8 @@ object ZOrder {
   * year of daily batches every range query touches one file per day.
   * [[compact]] is the periodic layout pass that re-clusters the WHOLE
   * table onto one global curve (the OPTIMIZE ZORDER shape): reads
-  * everything once, one range shuffle, two-rename directory swap — after
-  * it, file count and per-file spans are as if the table had been
+  * everything once, one range shuffle, one [[graft.ArtifactSwap]] —
+  * after it, file count and per-file spans are as if the table had been
   * written z-ordered in one shot (gated in ZOrderSpec).
   */
 object ZOrderTable {
@@ -95,13 +95,8 @@ object ZOrderTable {
   /** Append `df` as z-ordered files under `path` (batch-local quantile
     * cuts — the batch's own value distribution, which is what a daily
     * partition's readers filter by). Existing files are never touched.
-    *
-    * Runs [[recover]] first: without it, a crash between [[compact]]'s
-    * two swap renames (table parked at `__precompact`, live path
-    * absent) followed by the next day's append would re-create the
-    * live path holding ONE batch — and the next compact's
-    * stale-recovery-copy rule (old + live both present → drop old)
-    * would then delete the parked full table silently.
+    * Runs [[recover]] first, so a batch never lands on a fresh table
+    * while an interrupted compact holds the full one parked.
     */
   def append(df: DataFrame, cols: Seq[String], path: String,
              numFiles: Int, bits: Int = 8): Unit = {
@@ -109,66 +104,25 @@ object ZOrderTable {
     ZOrder.writeZOrdered(df, cols, path, numFiles, bits, mode = "append")
   }
 
-  /** Restore a table a crashed [[compact]] left parked at
-    * `__precompact` with no live path — the roll-back half of compact's
-    * own preamble, exposed to every entry point that writes or reads
-    * the table outside compact.
+  /** Finish or undo a [[compact]] a crash interrupted
+    * ([[graft.ArtifactSwap.recover]]) — for every entry point that writes
+    * or reads the table outside compact.
     */
-  def recover(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (fs.exists(old) && !fs.exists(p)) {
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(s"compact recovery failed: $old -> $p")
-    }
-  }
+  def recover(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    graft.ArtifactSwap.hadoop(spark, path).recover()
 
   /** Re-cluster the whole table onto one global curve and swap it in
-    * (write beside, rename live aside, rename new in, drop the old):
-    * global quantile cuts, one range shuffle, `numFiles` output files.
-    * Rows are preserved exactly — compaction is a permutation, like
-    * every other maintenance pass here. The swap is two metadata
-    * renames, NOT one atomic operation: a crash between them leaves the
-    * table at `path + "__precompact"` (rename it back); concurrent
-    * readers can observe a path-not-found during that instant — run
-    * compact in the table's maintenance window, like OPTIMIZE.
+    * per [[graft.ArtifactSwap]]: global quantile cuts, one range
+    * shuffle, `numFiles` output files. Rows are preserved exactly —
+    * compaction is a permutation, like every other maintenance pass
+    * here. Run it in the table's maintenance window, like OPTIMIZE.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               cols: Seq[String], numFiles: Int, bits: Int = 8): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    val old = new org.apache.hadoop.fs.Path(path + "__precompact")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    // crash-recovery BEFORE cleanup: if a prior compact died between the
-    // two swap renames, the table's only copy lives at `old` — restore it
-    // rather than deleting it (the scaladoc's recovery promise, automated).
-    // `old` is a stale recovery copy (safe to drop) ONLY when the live
-    // path also exists.
-    if (fs.exists(old)) {
-      if (!fs.exists(p)) {
-        if (!fs.rename(old, p))
-          throw new java.io.IOException(
-            s"compact recovery failed: $old -> $p")
-      } else fs.delete(old, true)
-    }
-    ZOrder.writeZOrdered(spark.read.parquet(path), cols, tmp.toString,
-      numFiles, bits)
-    // two renames, never delete-then-rename: a crash between a delete
-    // and the swap would leave NO live table path. After rename(p, old)
-    // the worst crash point leaves the table recoverable at `old`
-    // (rename back), and the live path is absent only for the gap
-    // between two metadata renames — not for the whole rewrite
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compact stage failed: $p -> $old")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p) // restore the original table before failing
-      throw new java.io.IOException(s"compact swap failed: $tmp -> $p")
-    }
-    fs.delete(old, true)
+    val swap = graft.ArtifactSwap.hadoop(spark, path)
+    swap.recover()
+    ZOrder.writeZOrdered(spark.read.parquet(path), cols, swap.stage(), numFiles, bits)
+    swap.commit()
   }
 }
 

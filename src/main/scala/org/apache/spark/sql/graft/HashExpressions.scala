@@ -92,19 +92,21 @@ object HashImpl {
     * banding error), and the exchange carries longs instead of
     * 20-40-byte grams. Element order/multiplicity preserved (the
     * consumer's Set construction is where collision collapse, if ever,
-    * happens). Null elements hash like the empty string does NOT —
-    * they stay null-free by the WordShingles contract (never emits
-    * nulls), so a plain per-element loop suffices.
+    * happens). Null elements are skipped, as [[minhash]] skips them.
     */
   def elementHashes(shingles: ArrayData, seed: Long): ArrayData = {
     val n = shingles.numElements()
     val out = new Array[Long](n)
+    var m = 0
     var j = 0
     while (j < n) {
-      out(j) = xx(shingles.getUTF8String(j), seed)
+      if (!shingles.isNullAt(j)) {
+        out(m) = xx(shingles.getUTF8String(j), seed)
+        m += 1
+      }
       j += 1
     }
-    new GenericArrayData(out)
+    new GenericArrayData(if (m == n) out else java.util.Arrays.copyOf(out, m))
   }
 
   /** [[lshBands]] and [[elementHashes]] in ONE pass over the shingles:
@@ -125,17 +127,21 @@ object HashImpl {
     val sig = new Array[Long](k)
     java.util.Arrays.fill(sig, Long.MaxValue)
     val hashes = new Array[Long](n)
+    var m = 0
     var j = 0
     while (j < n) {
-      val s = shingles.getUTF8String(j)
-      val h1 = xx(s, seed)
-      val h2 = xx(s, seed + 1)
-      hashes(j) = h1
-      var i = 0
-      while (i < k) {
-        val g = h1 + i * h2
-        if (g < sig(i)) sig(i) = g
-        i += 1
+      if (!shingles.isNullAt(j)) {
+        val s = shingles.getUTF8String(j)
+        val h1 = xx(s, seed)
+        val h2 = xx(s, seed + 1)
+        hashes(m) = h1
+        m += 1
+        var i = 0
+        while (i < k) {
+          val g = h1 + i * h2
+          if (g < sig(i)) sig(i) = g
+          i += 1
+        }
       }
       j += 1
     }
@@ -153,7 +159,8 @@ object HashImpl {
       b += 1
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](new GenericArrayData(out), new GenericArrayData(hashes)))
+      Array[Any](new GenericArrayData(out),
+        new GenericArrayData(if (m == n) hashes else java.util.Arrays.copyOf(hashes, m))))
   }
 
   /** 64-bit SimHash over the token array: ±1 vote per bit of each token's

@@ -102,4 +102,22 @@ class ContractSpec extends AnyFunSuite {
       assert(prefixes.contains(p), s"unexpected query name shape: $k")
     }
   }
+
+  test("renames live only in ArtifactSwap (every artifact store swaps through it)") {
+    // PollingSource's single-file FileContext OVERWRITE rename is already
+    // atomic on its own and is the one allowed exception
+    val allowed = Set("src/main/scala/graft/ArtifactSwap.scala",
+      "src/main/scala/graft/sources/v2/PollingSource.scala")
+    val call = "renameTo\\(|\\.rename\\(".r
+    import scala.jdk.CollectionConverters._
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.map(_.toString)
+      .filter(f => f.endsWith(".scala") && !allowed(f))
+      .filter(f => call.findFirstIn(new String(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)),
+        java.nio.charset.StandardCharsets.UTF_8)).nonEmpty)
+      .toList
+    assert(allowed.forall(f => new java.io.File(f).isFile), "stale allow-list")
+    assert(hits.isEmpty, s"rename outside ArtifactSwap: ${hits.mkString(", ")}")
+  }
 }

@@ -72,6 +72,23 @@ class SimilaritySpec extends SparkTestBase {
     assert(brute === Set(1L, 2L))
   }
 
+  test("mmrTopK: a NaN score ranks last instead of pinning the arg-max") {
+    // a and b overflow the double norm, so cos(q, ·) = finite/inf = 0 and
+    // sim(a, b) = inf/inf = NaN: after a is picked, b's MMR score is NaN
+    // while c's is finite. b sorts before c (cos 0 > −1) and must not
+    // win rank 2 just by being the first untaken candidate.
+    val vecs = Seq(
+      (100L, Seq(1.0, 0.0, 0.0)),        // query
+      (1L, Seq(1e200, 1e199, 0.0)),      // a — rank 1 (ties b on cos, lower id)
+      (2L, Seq(1e200, -1e199, 0.0)),     // b — NaN score at rank 2
+      (3L, Seq(-1.0, 0.0, 0.0))          // c — finite score at rank 2
+    ).toDF("vec_id", "embedding")
+    val got = Similarity.mmrTopK(vecs, vecs.filter(col("vec_id") === 100L),
+        kCand = 3, k = 3).collect()
+      .map(r => r.getAs[Long]("mmr_rank") -> r.getAs[Long]("neighbor_id")).toMap
+    assert(got === Map(1L -> 1L, 2L -> 3L, 3L -> 2L))
+  }
+
   test("labelCentroids: per-dimension mean by label") {
     val emb = Seq(
       (0L, Seq(1.0f, 3.0f), 7),
@@ -755,7 +772,7 @@ class SimilaritySpec extends SparkTestBase {
       .count(_.getName.startsWith("append_"))
 
   test("IvfIndex.compact: folds generations (fewer files, zero gens), search " +
-       "parity bit-exact, folded-key replay no-ops, crash at every phase self-heals") {
+       "parity bit-exact, folded-key replay no-ops") {
     import graft.sim.IvfIndex
     val gen = new scala.util.Random(41)
     val all = (0L until 120L).map(i => (i, Seq.fill(8)(gen.nextFloat())))
@@ -774,35 +791,16 @@ class SimilaritySpec extends SparkTestBase {
     def coldRows(upto: Long) = rows(graft.sim.Similarity.assignCells(
       all.filter(t => t._1 >= 40 || t._1 < upto).toDF("vec_id", "embedding"),
       cents, "vec_id", "embedding"))
-    // rollback: an UNCOMMITTED fold (no _SUCCESS) is discarded at the next entry
-    val junkTmp = new java.io.File(base, "corpus__compact")
-    assert(junkTmp.mkdirs())
-    java.nio.file.Files.write(new java.io.File(junkTmp, "part-junk.parquet").toPath,
-      Array[Byte](1))
-    val (r0, _) = IvfIndex.ensure(spark, fakeDir,
-      { fail("recovery must not rebuild"); corpus }, subset = "cpt")
-    assert(!junkTmp.exists(), "uncommitted fold must be rolled back")
-    assert(rows(r0) === coldRows(0))
-    // crash at EVERY destructive phase: each round appends a fresh batch,
-    // crashes compact at one phase, and proves any entry point self-heals
-    // to the full folded state (roll-forward: the fold committed first)
-    val phases = Seq("committed", "keys-swapped", "gens-deleted", "corpus-aside", "swapped")
-    phases.zipWithIndex.foreach { case (phase, i) =>
-      val batch = all.filter(t => t._1 >= i * 8 && t._1 < (i + 1) * 8)
-        .toDF("vec_id", "embedding")
-      IvfIndex.append(spark, fakeDir, s"p$i", batch, subset = "cpt")
-      val boom = intercept[RuntimeException] {
-        IvfIndex.compact(spark, fakeDir, "cpt",
-          p => if (p == phase) throw new RuntimeException(s"boom-$phase"))
-      }
-      assert(boom.getMessage === s"boom-$phase")
-      val (rec, cR) = IvfIndex.ensure(spark, fakeDir,
-        { fail("recovery must not rebuild"); corpus }, subset = "cpt")
-      assert(cR === cents, s"centroids moved recovering from $phase")
-      assert(rows(rec) === coldRows((i + 1) * 8L),
-        s"rows diverged recovering from crash at $phase")
-      assert(genCount(base) === 0, s"generations survived recovery from $phase")
+    // five batches folded by one compact (crash recovery of the fold is
+    // ArtifactSwapCrashSpec's)
+    (0 until 5).foreach { i =>
+      IvfIndex.append(spark, fakeDir, s"p$i",
+        all.filter(t => t._1 >= i * 8 && t._1 < (i + 1) * 8).toDF("vec_id", "embedding"),
+        subset = "cpt")
     }
+    val (folded, cF) = IvfIndex.compact(spark, fakeDir, "cpt")
+    assert(cF === cents, "compact must never move the centroids")
+    assert(rows(folded) === coldRows(40) && genCount(base) === 0)
     // a replay of a FOLDED batch key no-ops instead of double-counting
     val replay = all.filter(_._1 < 8).toDF("vec_id", "embedding")
     val (afterReplay, _) = IvfIndex.append(spark, fakeDir, "p0", replay, subset = "cpt")
@@ -829,7 +827,7 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("SrpIndex.compact: folds generations on both leaves (fewer files, zero " +
-       "gens), search parity, folded-key replay no-ops, crash at every phase self-heals") {
+       "gens), search parity, folded-key replay no-ops") {
     import graft.sim.SrpIndex
     val gen = new scala.util.Random(43)
     val all = (0L until 120L).map(i => (i, Seq.fill(8)(gen.nextFloat())))
@@ -842,31 +840,18 @@ class SimilaritySpec extends SparkTestBase {
     assert(ex.getMessage.contains("ensure"))
     val h0 = SrpIndex.ensure(spark, fakeDir, corpus, nTables = 4, subset = "cpt")
     val base = SrpIndex.root(fakeDir, 4, spark.sessionState.newHadoopConf(), "cpt")
-    // crash at EVERY destructive phase (incl. between the two leaf swaps
-    // — the window the commit marker exists for): fresh batch per round,
-    // any entry point self-heals to the full folded state
-    val phases = Seq("committed", "keys-swapped", "gens-deleted",
-      "vectors-swapped", "buckets-swapped")
-    phases.zipWithIndex.foreach { case (phase, i) =>
-      val batch = all.filter(t => t._1 >= i * 8 && t._1 < (i + 1) * 8)
-        .toDF("vec_id", "embedding")
-      SrpIndex.append(spark, fakeDir, 4, s"p$i", batch, subset = "cpt")
-      val boom = intercept[RuntimeException] {
-        SrpIndex.compact(spark, fakeDir, 4, "cpt",
-          p => if (p == phase) throw new RuntimeException(s"boom-$phase"))
-      }
-      assert(boom.getMessage === s"boom-$phase")
-      val h = SrpIndex.ensure(spark, fakeDir,
-        { fail("recovery must not rebuild"); corpus }, nTables = 4, subset = "cpt")
-      assert((h.planes, h.groups) === ((h0.planes, h0.groups)),
-        s"geometry moved recovering from $phase")
-      val expect = 80L + (i + 1) * 8L
-      assert(h.vectors.count() === expect,
-        s"vectors diverged recovering from crash at $phase")
-      assert(h.buckets.count() === expect * 4,
-        s"buckets diverged recovering from crash at $phase")
-      assert(genCount(base) === 0, s"generations survived recovery from $phase")
+    // five batches folded by one compact (crash recovery of the fold is
+    // ArtifactSwapCrashSpec's)
+    (0 until 5).foreach { i =>
+      SrpIndex.append(spark, fakeDir, 4, s"p$i",
+        all.filter(t => t._1 >= i * 8 && t._1 < (i + 1) * 8).toDF("vec_id", "embedding"),
+        subset = "cpt")
     }
+    val hF = SrpIndex.compact(spark, fakeDir, 4, "cpt")
+    assert((hF.planes, hF.groups) === ((h0.planes, h0.groups)),
+      "compact must never move the geometry")
+    assert(hF.vectors.count() === 120L && hF.buckets.count() === 480L)
+    assert(genCount(base) === 0)
     // a replay of a FOLDED batch key no-ops instead of double-counting
     val hReplay = SrpIndex.append(spark, fakeDir, 4, "p0",
       all.filter(_._1 < 8).toDF("vec_id", "embedding"), subset = "cpt")
@@ -923,19 +908,13 @@ class SimilaritySpec extends SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs(codes2) ===
       pairs(Similarity.pqEncode(all.toDF("vec_id", "embedding"), cb)))
-    // compact: zero gens, fewer files, rows preserved, crash self-heals
+    // compact: zero gens, fewer files, rows preserved (crash recovery of
+    // the fold is ArtifactSwapCrashSpec's)
     val base = PqIndex.root(fakeDir, hadoopConf = spark.sessionState.newHadoopConf(),
       subset = "inc")
     val filesBefore = parquetCount(base)
-    val boom = intercept[RuntimeException] {
-      PqIndex.compact(spark, fakeDir, subset = "inc",
-        failpoint = p => if (p == "codes-aside") throw new RuntimeException("boom"))
-    }
-    assert(boom.getMessage === "boom")
-    // recovery at the next entry point (the append requires run recover first)
-    val (recovered, _) = PqIndex.ensure(spark, fakeDir,
-      { fail("recovery must not rebuild"); corpus }, subset = "inc")
-    assert(rows(recovered) === cold)
+    val (compacted, _) = PqIndex.compact(spark, fakeDir, subset = "inc")
+    assert(rows(compacted) === cold)
     assert(genCount(base) === 0)
     assert(parquetCount(base) < filesBefore, "compact must strictly drop file count")
     // a replay of the FOLDED batch no-ops instead of double-counting
